@@ -68,7 +68,7 @@ import graft.streaming.TailStream
   * `--config app.conf` loads a java-properties config instead — the
   * analogue of the reference's YAML file (config/config.go), including
   * its N-source form. Sources become per-window views t0..tN
-  * (TailStream.runMulti):
+  * ([[TailStream.start]]):
   * {{{
   * window.size_seconds=60
   * # window.slide_seconds=30   window.ts_field=ts   watermark=10 minutes
@@ -384,80 +384,94 @@ object TailApp {
 
   /** The whole CLI, with the result sink injectable so the spec can
     * drive a real two-source run end to end and capture its output.
+    * Each input form only yields its source configs and join keys; one
+    * launch path runs them all.
     */
   private[graft] def runCli(args: Array[String], sink: String => Unit,
                             stopSparkOnExit: Boolean = true): Unit = {
     val a = parseArgs(args.filterNot(Flags))
-    val snapshot = args.contains("--snapshot")
-    def setLogLevel(spark: org.apache.spark.sql.SparkSession): Unit =
-      // the reference's -l/--log-level (logrus levels)
-      one(a, "log-level").foreach(l =>
-        spark.sparkContext.setLogLevel(logrusToSpark(l)))
-    one(a, "config").foreach { path =>
-      // only these flags override the file; anything else would be
-      // silently ignored — reject it instead of misleading the operator
-      val overridable =
-        Set("config", "sql", "format", "checkpoint", "trigger-sec", "log-level")
-      val unsupported = (a.keySet -- overridable).toSeq.sorted
-      require(unsupported.isEmpty,
-        s"--config supports only --sql/--format/--checkpoint/--trigger-sec" +
-          s"/--log-level/--once/--snapshot as overrides; set the rest in the " +
-          s"file. Unsupported here: ${unsupported.map("--" + _).mkString(", ")}")
-      // bare flags are stripped before parseArgs, so they need their own
-      // check — --seek-end/--stdin with --config would otherwise be
-      // silently ignored (seek behavior comes from each source's
-      // do_not_tail; spooled input has no config-file form)
-      val unsupportedBare = args.filter(Flags).filterNot(Set("--once", "--snapshot"))
-      require(unsupportedBare.isEmpty,
-        s"${unsupportedBare.mkString(", ")} cannot combine with --config; " +
-          "set source.N.do_not_tail in the file instead of --seek-end")
-      // a .yaml/.yml path loads the reference's OWN config schema
-      // (config/config.go) verbatim; anything else the properties form
-      val (cfgs0, yamlLogLevel) =
-        if (path.endsWith(".yaml") || path.endsWith(".yml")) {
-          val text = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          fromYaml(text,
-            p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-        } else {
-          val props = new java.util.Properties()
-          val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
-          try props.load(in) finally in.close()
-          (fromProperties(props), None)
-        }
-      // explicit CLI flags win over the file
-      val cfgs = cfgs0.map(c => c.copy(
-        sql = one(a, "sql").orElse(c.sql),
-        format = one(a, "format").getOrElse(c.format)))
-      val spark0 = GraftSession.get()
-      // the file's log.level applies first, an explicit --log-level wins
-      yamlLogLevel.foreach(l => spark0.sparkContext.setLogLevel(logrusToSpark(l)))
-      setLogLevel(spark0)
-      val ckpt0 = one(a, "checkpoint").getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-tailapp").toString)
-      val trig =
-        if (args.contains("--once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(
-          one(a, "trigger-sec").getOrElse("5").toLong * 1000L)
-      val head = cfgs.head
-      val multiSql = head.sql.getOrElse(
-        "SELECT window_start, count(*) AS n FROM t0 GROUP BY 1 ORDER BY 1")
-      val q0 =
-        if (cfgs.size == 1 && snapshot)
-          TailStream.runSnapshot(spark0, head, ckpt0, sink, trigger = trig)
-        else if (cfgs.size == 1)
-          TailStream.run(spark0, head, ckpt0, sink, trigger = trig)
-        else if (snapshot)
-          TailStream.runMultiSnapshot(spark0, cfgs, multiSql,
-            head.format, ckpt0, sink, trigger = trig)
-        else
-          TailStream.runMulti(spark0, cfgs, multiSql,
-            head.format, ckpt0, sink, trigger = trig)
-      q0.awaitTermination()
-      if (stopSparkOnExit) spark0.stop()
-      return
+    val (cfgs, join) = one(a, "config") match {
+      case Some(path) => (fromConfigFile(path, a, args), None)
+      case None if a.getOrElse("dir", Nil).size > 1 => (fromDirFlags(a, args), None)
+      case None => fromSingleSource(a, args)
     }
+    val spark = GraftSession.get()
+    // the reference's -l/--log-level (logrus levels)
+    one(a, "log-level").foreach(l => spark.sparkContext.setLogLevel(logrusToSpark(l)))
+    val ckpt = one(a, "checkpoint").getOrElse(
+      java.nio.file.Files.createTempDirectory("graft-tailapp").toString)
+    val trigger =
+      if (args.contains("--once")) Trigger.AvailableNow()
+      else Trigger.ProcessingTime(one(a, "trigger-sec").getOrElse("5").toLong * 1000L)
+    TailStream.start(spark, cfgs, cfgs.head.sql.getOrElse(TailStream.DefaultSql),
+      cfgs.head.format, ckpt, sink, trigger,
+      snapshot = args.contains("--snapshot"), join = join).awaitTermination()
+    if (stopSparkOnExit) spark.stop()
+  }
+
+  /** `--config FILE`: the sources a properties or reference YAML file
+    * declares; only the output flags override the file.
+    */
+  private def fromConfigFile(path: String, a: Map[String, Seq[String]],
+                             args: Array[String]): Seq[TailStream.Config] = {
+    // only these flags override the file; anything else would be
+    // silently ignored — reject it instead of misleading the operator
+    val overridable =
+      Set("config", "sql", "format", "checkpoint", "trigger-sec", "log-level")
+    val unsupported = (a.keySet -- overridable).toSeq.sorted
+    require(unsupported.isEmpty,
+      s"--config supports only --sql/--format/--checkpoint/--trigger-sec" +
+        s"/--log-level/--once/--snapshot as overrides; set the rest in the " +
+        s"file. Unsupported here: ${unsupported.map("--" + _).mkString(", ")}")
+    // bare flags are stripped before parseArgs, so they need their own
+    // check — --seek-end/--stdin with --config would otherwise be
+    // silently ignored (seek behavior comes from each source's
+    // do_not_tail; spooled input has no config-file form)
+    val unsupportedBare = args.filter(Flags).filterNot(Set("--once", "--snapshot"))
+    require(unsupportedBare.isEmpty,
+      s"${unsupportedBare.mkString(", ")} cannot combine with --config; " +
+        "set source.N.do_not_tail in the file instead of --seek-end")
+    // a .yaml/.yml path loads the reference's OWN config schema
+    // (config/config.go) verbatim; anything else the properties form
+    val (cfgs, yamlLogLevel) =
+      if (path.endsWith(".yaml") || path.endsWith(".yml")) {
+        val text = new String(
+          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+          java.nio.charset.StandardCharsets.UTF_8)
+        fromYaml(text,
+          p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
+      } else {
+        val props = new java.util.Properties()
+        val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
+        try props.load(in) finally in.close()
+        (fromProperties(props), None)
+      }
+    // the file's log.level applies now; an explicit --log-level, set at
+    // launch, wins
+    yamlLogLevel.foreach(l => GraftSession.get().sparkContext.setLogLevel(logrusToSpark(l)))
+    // explicit CLI flags win over the file
+    cfgs.map(c => c.copy(
+      sql = one(a, "sql").orElse(c.sql),
+      format = one(a, "format").getOrElse(c.format)))
+  }
+
+  /** Repeated `--dir`: the reference's N-source slice-flag form. */
+  private def fromDirFlags(a: Map[String, Seq[String]],
+                           args: Array[String]): Seq[TailStream.Config] = {
+    val incompatible = Seq("dir2", "pattern2", "filter2", "join-keys",
+      "follow-file", "pipe").filter(a.contains) ++
+      (if (args.contains("--stdin")) Seq("stdin") else Nil)
+    require(incompatible.isEmpty,
+      s"repeated --dir cannot combine with ${incompatible.map("--" + _).mkString(", ")}" +
+        "; each repeated source is a tailed directory")
+    fromRepeatedFlags(a, seekEnd = args.contains("--seek-end"))
+  }
+
+  /** One `--dir`, `--follow-file`, `--stdin` or `--pipe` source,
+    * joined on `--join-keys` to a second `--dir2` source when given.
+    */
+  private def fromSingleSource(a: Map[String, Seq[String]], args: Array[String])
+      : (Seq[TailStream.Config], Option[Seq[String]]) = {
     // the slice flags must pair 1:1 with --dir even when --dir is NOT
     // repeated — `--dir /a --pattern p1 --pattern p2` would otherwise
     // silently truncate to p1 (the reference rejects it: "regex num
@@ -467,34 +481,6 @@ object TailApp {
       require(a.getOrElse(k, Seq.empty).size <= math.max(nDirs, 1),
         s"--$k given ${a(k).size} times for $nDirs --dir value(s); " +
           "slice flags pair 1:1 with --dir")
-    // repeated --dir = the reference's N-source slice-flag form
-    if (nDirs > 1) {
-      val incompatible = Seq("dir2", "pattern2", "filter2", "join-keys",
-        "follow-file", "pipe").filter(a.contains) ++
-        (if (args.contains("--stdin")) Seq("stdin") else Nil)
-      require(incompatible.isEmpty,
-        s"repeated --dir cannot combine with ${incompatible.map("--" + _).mkString(", ")}" +
-          "; each repeated source is a tailed directory")
-      val cfgs = fromRepeatedFlags(a, seekEnd = args.contains("--seek-end"))
-      val spark = GraftSession.get()
-      setLogLevel(spark)
-      val ckpt = one(a, "checkpoint").getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-tailapp").toString)
-      val trig =
-        if (args.contains("--once")) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(
-          one(a, "trigger-sec").getOrElse("5").toLong * 1000L)
-      val sql = cfgs.head.sql.getOrElse(
-        "SELECT window_start, count(*) AS n FROM t0 GROUP BY 1 ORDER BY 1")
-      val q =
-        if (snapshot) TailStream.runMultiSnapshot(spark, cfgs, sql,
-          cfgs.head.format, ckpt, sink, trigger = trig)
-        else TailStream.runMulti(spark, cfgs, sql,
-          cfgs.head.format, ckpt, sink, trigger = trig)
-      q.awaitTermination()
-      if (stopSparkOnExit) spark.stop()
-      return
-    }
     // --stdin / --pipe <fifo>: spool the push-style input into a temp
     // directory and tail THAT — the reference's stdin/namedpipe sources
     // (source/stdin.go, source/namedpipe.go). With --once the spool is
@@ -516,54 +502,19 @@ object TailApp {
       one(a, "dir").getOrElse(
         sys.error("--dir, --follow-file, --stdin or --pipe is required")))
     val pattern = one(a, "pattern").getOrElse(sys.error("--pattern is required"))
-
-    val throttle = one(a, "throttlers").flatMap(parseThrottleOpt)
-    val cfg = TailStream.Config(
-      dir = dir,
-      pattern = pattern,
+    // the shared window/output flags read exactly as in the repeated form
+    val cfg = fromRepeatedFlags(a.updated("dir", Seq(dir)),
+      seekEnd = args.contains("--seek-end")).head.copy(
       follow = spooledDir.isEmpty && followFile.isDefined,
-      followMaxBytes = one(a, "max-bytes-per-trigger").map(_.toLong),
-      filter = one(a, "filter"),
-      throttleMax = throttle.map(_._1),
-      throttlePeriodSec = throttle.map(_._2),
-      maxFilesPerTrigger = one(a, "max-files-per-trigger").map(_.toInt),
-      windowSizeSec = one(a, "window").getOrElse("60").toLong,
-      slideSec = one(a, "slide").map(_.toLong),
-      tsField = one(a, "ts-field"),
-      watermarkDelay = one(a, "watermark").getOrElse("10 minutes"),
-      sql = one(a, "sql"),
-      format = one(a, "format").getOrElse("table"),
-      // CLI default processes what's in the dir (useful with --once);
-      // --seek-end gives the reference's tail-from-now behavior
-      doNotTail = !args.contains("--seek-end"))
-
-    val spark = GraftSession.get()
-    setLogLevel(spark)
-    val ckpt = one(a, "checkpoint").getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-tailapp").toString)
-    val trigger =
-      if (args.contains("--once")) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(
-        one(a, "trigger-sec").getOrElse("5").toLong * 1000L)
-    val q = one(a, "dir2") match {
+      followMaxBytes = one(a, "max-bytes-per-trigger").map(_.toLong))
+    one(a, "dir2") match {
       case Some(dir2) =>
         val cfg2 = cfg.copy(dir = dir2,
           pattern = one(a, "pattern2").getOrElse(pattern),
           filter = one(a, "filter2"))
         val keys = one(a, "join-keys").map(_.split(",").toSeq).getOrElse(Seq.empty)
-        val sql = cfg.sql.getOrElse(
-          "SELECT window_start, count(*) AS n FROM t0 GROUP BY 1 ORDER BY 1")
-        if (snapshot)
-          TailStream.runJoinSnapshot(spark, cfg, cfg2, keys, sql,
-            cfg.format, ckpt, sink, trigger = trigger)
-        else
-          TailStream.runJoin(spark, cfg, cfg2, keys, sql,
-            cfg.format, ckpt, sink, trigger = trigger)
-      case None =>
-        if (snapshot) TailStream.runSnapshot(spark, cfg, ckpt, sink, trigger = trigger)
-        else TailStream.run(spark, cfg, ckpt, sink, trigger = trigger)
+        (Seq(cfg, cfg2), Some(keys))
+      case None => (Seq(cfg), None)
     }
-    q.awaitTermination()
-    if (stopSparkOnExit) spark.stop()
   }
 }

@@ -1,8 +1,12 @@
 package graft.operators
 
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's throttler (squeryer.go:352-361): at most N elements
   * per period, overflow discarded.
@@ -38,6 +42,9 @@ object Throttle {
     * in squeryer.go:352. Which rows of a period survive follows
     * arrival order, which inside a micro-batch is partition order —
     * the same arrival nondeterminism the reference's channel has.
+    * A row whose period timed out before it arrived (period end plus
+    * `delay` already behind the watermark) is discarded: that period's
+    * count is gone, so no admission for it can be exact.
     */
   def streaming(df: DataFrame, tsCol: String, periodSec: Long, n: Int,
                 delay: String): DataFrame = {
@@ -47,6 +54,8 @@ object Throttle {
     val withPeriod = df
       .withWatermark(tsCol, delay)
       .withColumn("_period", floor(unix_micros(col(tsCol)) / lit(periodSec * 1000000L)))
+    val delayMs = IntervalUtils.getDuration(
+      IntervalUtils.stringToInterval(UTF8String.fromString(delay)), TimeUnit.MILLISECONDS)
     implicit val rowEnc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
       org.apache.spark.sql.Encoders.row(withPeriod.schema)
     withPeriod
@@ -54,13 +63,15 @@ object Throttle {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (period: Long, rows: Iterator[org.apache.spark.sql.Row],
          state: GroupState[Long]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
+          // state lives until the watermark passes the period's end
+          val timeoutMs = (period + 1) * periodSec * 1000L + delayMs
+          if (state.hasTimedOut || timeoutMs < state.getCurrentWatermarkMs()) {
+            state.remove(); Iterator.empty
+          } else {
             val used = state.getOption.getOrElse(0L)
             val admitted = rows.take(math.max(0, n - used.toInt)).toSeq
             state.update(used + admitted.size)
-            // state lives until the watermark passes the period's end
-            state.setTimeoutTimestamp((period + 1) * periodSec * 1000L, delay)
+            state.setTimeoutTimestamp(timeoutMs)
             admitted.iterator
           }
         })

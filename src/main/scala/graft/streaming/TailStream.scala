@@ -23,9 +23,10 @@ import graft.sources.LogSource
   *  - tumbling/sliding     -> window(ts, size, slide) + watermark
   *    (event time), or window over the ingest timestamp
   *    (processing time, reference default when idx_of_ts_field < 0)
-  *  - per-window SQL       -> foreachBatch: register batch as t0, run
-  *    the user's SQL — the exact "snapshot table per window fire"
-  *    semantics of the reference's in-mem engine, except distributed
+  *  - per-window SQL       -> foreachBatch: register the rows as views
+  *    t0..tN, run the user's SQL — per micro-batch, or once per closed
+  *    window (the reference's in-mem engine fire, except distributed);
+  *    [[start]] is the one runner for every source shape and mode
   *  - sink table/raw/rawv  -> Formatters over the (small) SQL result
   *
   * State at 100 TB: the watermark bounds window state; the shuffle is
@@ -74,10 +75,14 @@ object TailStream {
       follow: Boolean = false,
       followMaxBytes: Option[Long] = None)
 
+  /** The SQL a run fires when none is given: one row count per window. */
+  val DefaultSql: String =
+    "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1"
+
   /** source → parse → filter → throttle, as an unbounded DataFrame.
-    * `tname` tags every row for the multi-source union (runMulti /
-    * runMultiSnapshot) — the tag rides through the throttle, which
-    * keeps the full row schema.
+    * `tname` tags every row for the multi-source union in [[start]] —
+    * the tag rides through the throttle, which keeps the full row
+    * schema.
     */
   def parsed(spark: SparkSession, cfg: Config,
              tname: Option[String] = None): DataFrame = {
@@ -120,125 +125,6 @@ object TailStream {
     }
   }
 
-  /** Full pipeline, INCREMENTAL flavor: each micro-batch's windowed
-    * rows are registered as table `t0` (flattened window bounds as
-    * window_start/window_end epoch seconds) and the user SQL runs over
-    * it; the result goes to `sink` formatted as table/raw/rawv.
-    *
-    * Under a continuous trigger a window spanning several micro-batches
-    * is reported once per batch, over that batch's rows only — a
-    * partial, incremental preview (useful as a low-latency tail).
-    * For the reference's fire-once-per-complete-window semantics use
-    * [[runSnapshot]]; for aggregations expressible as DataFrame aggs
-    * use [[windowedAgg]] (stateful, no row buffering).
-    *
-    * `checkpointDir` makes the stream restartable (the reference's
-    * seek-to-end tail has no such guarantee — this is strictly
-    * stronger).
-    */
-  def run(spark: SparkSession, cfg: Config, checkpointDir: String,
-          sink: String => Unit = s => if (s.nonEmpty) println(s),
-          trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    val q = cfg.sql.getOrElse(
-      "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1")
-    windowed(parsed(spark, cfg), cfg).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        flat.createOrReplaceTempView("t0")
-        sink(Formatters.format(flat.sparkSession.sql(q), cfg.format, Some(q)))
-      }
-      .start()
-  }
-
-  /** Shared tail of the snapshot pipelines: rows already carrying a
-    * `window` struct are packed per (window, shard) under the event-time
-    * watermark, and in APPEND mode a (window, shard) group only reaches
-    * foreachBatch once the watermark passes the window end — i.e. once
-    * the window is complete. The batch then explodes the packed rows
-    * back and runs the user SQL once per closed window over its full
-    * snapshot, exactly the reference's per-window in-mem engine fire.
-    *
-    * Scale shape: buffering a window's rows is inherent to "arbitrary
-    * SQL over the complete window" (the reference holds the window in
-    * an in-memory database on one node); here the buffer lives in the
-    * state store sharded `shards` ways across executors, so no single
-    * task holds a hot window. Aggregations expressible as DataFrame
-    * aggs should prefer [[windowedAgg]], which keeps running partials
-    * instead of rows.
-    */
-  /** A per-window view the snapshot runner registers: `tname` filters
-    * the packed rows by their `_tname` tag (None = all rows), `cols`
-    * restricts to that source's own columns.
-    */
-  private case class SnapshotView(name: String, tname: Option[String],
-                                  cols: Seq[String])
-
-  private def runSnapshotOn(windowed: DataFrame, dataCols: Seq[String],
-                            views: Seq[SnapshotView],
-                            sql: String, format: String, checkpointDir: String,
-                            sink: String => Unit, trigger: Trigger,
-                            shards: Int): StreamingQuery =
-    windowed
-      .groupBy(col("window"),
-        pmod(xxhash64(dataCols.map(col): _*), lit(shards)).as("_shard"))
-      .agg(collect_list(struct(dataCols.map(col): _*)).as("_rows"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
-          .select(Seq(col("window_start"), col("window_end")) ++
-            dataCols.map(c => col(s"_r.$c").as(c)): _*)
-          .persist()
-        try {
-          // one SQL fire per closed window, in window order; the set of
-          // windows closing per trigger is small (trigger/slide bounded)
-          val wins = flat.select("window_start", "window_end").distinct()
-            .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-          wins.foreach { case (ws, we) =>
-            val w = flat.filter(col("window_start") === ws && col("window_end") === we)
-            views.foreach { v =>
-              v.tname.map(t => w.filter(col("_tname") === t)).getOrElse(w)
-                .select((v.cols.filterNot(c => c == "window" || c == "_tname") :+
-                  "window_start" :+ "window_end").map(col): _*)
-                .createOrReplaceTempView(v.name)
-            }
-            sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
-          }
-        } finally { flat.unpersist(); () }
-      }
-      .start()
-
-  /** Full pipeline, COMPLETE-WINDOW flavor: the user SQL fires exactly
-    * once per window, over that window's full contents, when the
-    * event-time watermark closes it — the reference's window-snapshot
-    * semantics (squeryer.go window stage) made distributed. Requires
-    * `tsField` (completeness is only defined relative to a watermark).
-    */
-  def runSnapshot(spark: SparkSession, cfg: Config, checkpointDir: String,
-                  sink: String => Unit = s => if (s.nonEmpty) println(s),
-                  trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                  shards: Int = 32): StreamingQuery = {
-    require(cfg.tsField.isDefined,
-      "runSnapshot needs tsField: fire-once-per-complete-window is defined " +
-        "by the event-time watermark (use run() for processing-time tails)")
-    val q = cfg.sql.getOrElse(
-      "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1")
-    val src = parsed(spark, cfg)
-    runSnapshotOn(windowed(src, cfg), src.columns.toSeq,
-      Seq(SnapshotView("t0", None, src.columns.toSeq)),
-      q, cfg.format, checkpointDir, sink, trigger, shards)
-  }
-
   /** The reference's multi-file SQL (JOIN across t0..tN inside one
     * window snapshot, squeryer.go:228) in its Spark-native form: a
     * watermarked stream-stream join. Each source parses and windows
@@ -251,8 +137,8 @@ object TailStream {
     * `_1`, mirroring the reference's t1 naming, so the flat result
     * view has unique names for downstream SQL.
     */
-  def joinedStreams(spark: SparkSession, left: Config, right: Config,
-                    keys: Seq[String]): DataFrame = {
+  private def joinedStreams(spark: SparkSession, left: Config, right: Config,
+                            keys: Seq[String]): DataFrame = {
     // Event time is mandatory here: without watermarks the join state
     // grows forever, and processing-time windows would only match rows
     // that happen to be picked up in the same wall-clock window.
@@ -273,147 +159,142 @@ object TailStream {
     l.join(r, joinCols)
   }
 
-  /** Per-window SQL over two joined tailed sources, INCREMENTAL
-    * flavor: the joined stream is registered as `t0` per micro-batch
-    * (window bounds flattened) and `sql` runs over it. Like [[run]],
-    * a window whose matches surface across several micro-batches is
-    * previewed per batch; [[runJoinSnapshot]] gives the fire-once
-    * complete-window form.
+  /** A view each SQL fire registers: the rows tagged `tname` (None =
+    * all rows), restricted to `cols` plus the flattened window bounds.
     */
-  def runJoin(spark: SparkSession, left: Config, right: Config,
-              keys: Seq[String], sql: String, format: String,
-              checkpointDir: String,
-              sink: String => Unit = s => if (s.nonEmpty) println(s),
-              trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    joinedStreams(spark, left, right, keys).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        flat.createOrReplaceTempView("t0")
-        sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
-      }
-      .start()
+  private case class View(name: String, tname: Option[String], cols: Seq[String])
 
-  /** The reference's FULL multi-file surface (squeryer.go:429
-    * "create multi table by metafield __tname"): N tailed sources,
-    * each registered per micro-batch as its own view t0..tN inside
-    * one window snapshot, and the user SQL free to join/union any of
-    * them. Spark-native form: every source parses with a `_tname`
-    * tag, the streams union by name (missing columns null-filled —
-    * sources keep their own schemas), window once, and foreachBatch
-    * splits the batch back into per-source views, each restricted to
-    * its own columns plus the flattened window bounds.
-    *
-    * The window/slide/watermark settings of the FIRST config govern
-    * all sources (the reference's WindowCfg is likewise global);
-    * each source keeps its own pattern, filter, throttle,
-    * seek-to-end (doNotTail/tailSince), and tsField name. One union
-    * stream means one checkpoint and one
-    * trigger clock for all tails, exactly like the reference's single
-    * merged window stage.
+  /** Flattens the `window` struct to window_start/window_end epoch
+    * seconds and registers every view over the flat rows.
     */
-  def runMulti(spark: SparkSession, cfgs: Seq[Config], sql: String,
-               format: String, checkpointDir: String,
-               sink: String => Unit = s => if (s.nonEmpty) println(s),
-               trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    require(cfgs.nonEmpty, "runMulti needs at least one source")
-    val win = cfgs.head
-    val parts = cfgs.zipWithIndex.map { case (c, i) =>
-      // route through parsed() so each source's throttle and
-      // seek-to-end (doNotTail/tailSince) config actually applies —
-      // only the WINDOW settings come from the first config
-      val src = parsed(spark, c, tname = Some(s"t$i"))
-      windowed(src, win.copy(tsField = c.tsField))
+  private def registerViews(rows: DataFrame, views: Seq[View]): Unit = {
+    val flat = rows
+      .withColumn("window_start", unix_timestamp(col("window.start")))
+      .withColumn("window_end", unix_timestamp(col("window.end")))
+    views.foreach { v =>
+      v.tname.map(t => flat.filter(col("_tname") === t)).getOrElse(flat)
+        .select((v.cols :+ "window_start" :+ "window_end").map(col): _*)
+        .createOrReplaceTempView(v.name)
     }
-    // per-source data columns (minus the tag), for re-splitting below
-    val perTable = parts.map(_.columns.filterNot(_ == "_tname").toSeq)
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    unioned.writeStream
+  }
+
+  /** The whole pipeline: `sources` tail, parse, filter, throttle and
+    * window, then `sql` runs over them and its result goes to `sink`
+    * formatted as table/raw/rawv. The runner varies along two axes.
+    *
+    * Source shape:
+    *  - one source is view `t0`;
+    *  - N sources are views t0..tN (the reference's __tname multi-table
+    *    form, squeryer.go:429): each parses with a `_tname` tag, the
+    *    streams union by name (missing columns null-filled), window
+    *    once, and each view is split back out by tag, restricted to its
+    *    own columns. The window/slide/watermark settings of the FIRST
+    *    source govern all of them (the reference's WindowCfg is
+    *    likewise global); each source keeps its own pattern, filter,
+    *    throttle, seek-to-end and tsField name. One union stream means
+    *    one checkpoint and one trigger clock for all tails;
+    *  - `join = Some(keys)` takes exactly two sources and registers
+    *    their watermarked stream-stream join on (window, keys) as the
+    *    single view `t0`, right-side columns suffixed `_1`.
+    *
+    * Mode:
+    *  - incremental (`snapshot = false`): the SQL fires once per
+    *    micro-batch over that batch's rows, so a window spanning
+    *    several batches is previewed per batch — a low-latency tail;
+    *  - snapshot (`snapshot = true`, needs tsField): rows are packed
+    *    per (window, shard) under the event-time watermark, and in
+    *    APPEND mode a group only reaches foreachBatch once the
+    *    watermark passes the window end. The SQL then fires exactly
+    *    once per closed window over its full contents — the
+    *    reference's per-window in-mem engine fire, made distributed.
+    *    Buffering a window's rows is inherent to arbitrary SQL over
+    *    the complete window; here the buffer lives in the state store,
+    *    sharded `shards` ways so no single task holds a hot window.
+    *
+    * `checkpointDir` makes the stream restartable (the reference's
+    * seek-to-end tail has no such guarantee — this is strictly
+    * stronger).
+    */
+  def start(spark: SparkSession, sources: Seq[Config], sql: String, format: String,
+            checkpointDir: String,
+            sink: String => Unit = s => if (s.nonEmpty) println(s),
+            trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
+            snapshot: Boolean = false, join: Option[Seq[String]] = None,
+            shards: Int = 32): StreamingQuery = {
+    require(sources.nonEmpty, "start needs at least one source")
+    require(join.isEmpty || sources.size == 2, "join needs exactly two sources")
+    require(!snapshot || sources.forall(_.tsField.isDefined),
+      "snapshot needs tsField on every source: fire-once-per-complete-window " +
+        "is defined by the event-time watermark")
+    val (stream, views) = join match {
+      case Some(keys) =>
+        val joined = joinedStreams(spark, sources(0), sources(1), keys)
+        (joined, Seq(View("t0", None, joined.columns.filterNot(_ == "window").toSeq)))
+      case None =>
+        // a tag only when there is something to split: one source keeps
+        // the untagged plan (and its state schema and checkpoints)
+        val tag = (i: Int) => if (sources.size > 1) Some(s"t$i") else None
+        val parts = sources.zipWithIndex.map { case (c, i) =>
+          windowed(parsed(spark, c, tag(i)), sources.head.copy(tsField = c.tsField))
+        }
+        (parts.reduce(_.unionByName(_, allowMissingColumns = true)),
+          parts.zipWithIndex.map { case (p, i) =>
+            View(s"t$i", tag(i), p.columns.filterNot(c => c == "window" || c == "_tname").toSeq)
+          })
+    }
+    def fire(rows: DataFrame): Unit = {
+      registerViews(rows, views)
+      sink(Formatters.format(rows.sparkSession.sql(sql), format, Some(sql)))
+    }
+    val dataCols = stream.columns.filterNot(_ == "window").map(col).toSeq
+    val out =
+      if (!snapshot) stream
+      else stream
+        .groupBy(col("window"), pmod(xxhash64(dataCols: _*), lit(shards)).as("_shard"))
+        .agg(collect_list(struct(dataCols: _*)).as("_rows"))
+    out.writeStream
+      .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        perTable.zipWithIndex.foreach { case (cols, i) =>
-          flat.filter(col("_tname") === s"t$i")
-            .select((cols.filterNot(_ == "window") :+
-              "window_start" :+ "window_end").map(col): _*)
-            .createOrReplaceTempView(s"t$i")
+        if (!snapshot) fire(batch)
+        else {
+          val rows = batch.select(col("window"), explode(col("_rows")).as("_r"))
+            .select("window", "_r.*").persist()
+          try {
+            // one SQL fire per closed window, in window order; the set of
+            // windows closing per trigger is small (trigger/slide bounded)
+            val wins = rows.select("window.start", "window.end").distinct().collect()
+              .map(r => (r.getTimestamp(0), r.getTimestamp(1)))
+              .sortBy { case (s, e) => (s.getTime, e.getTime) }
+            wins.foreach { case (s, e) =>
+              fire(rows.filter(col("window.start") === s && col("window.end") === e))
+            }
+          } finally { rows.unpersist(); () }
         }
-        sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
       }
       .start()
   }
 
-  /** Complete-window SQL over two joined tailed sources: the
-    * watermarked stream-stream join feeds the same append-mode
-    * window-packing stage as [[runSnapshot]] (two chained stateful
-    * operators — join state then window state, both watermark-bounded),
-    * so `sql` fires exactly once per window over all joined rows of
-    * that window.
+  /** One tailed source, incremental mode, with the source's own SQL
+    * (default [[DefaultSql]]) and format. A forward to [[start]], kept
+    * with this signature because the benchmark harness calls it.
     */
-  def runJoinSnapshot(spark: SparkSession, left: Config, right: Config,
-                      keys: Seq[String], sql: String, format: String,
-                      checkpointDir: String,
-                      sink: String => Unit = s => if (s.nonEmpty) println(s),
-                      trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                      shards: Int = 32): StreamingQuery = {
-    val joined = joinedStreams(spark, left, right, keys)
-    val dataCols = joined.columns.filterNot(_ == "window").toSeq
-    runSnapshotOn(joined, dataCols, Seq(SnapshotView("t0", None, dataCols)),
-      sql, format, checkpointDir, sink, trigger, shards)
-  }
+  def run(spark: SparkSession, cfg: Config, checkpointDir: String,
+          sink: String => Unit = s => if (s.nonEmpty) println(s),
+          trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
+    start(spark, Seq(cfg), cfg.sql.getOrElse(DefaultSql), cfg.format, checkpointDir,
+      sink, trigger)
 
-  /** Complete-window form of [[runMulti]]: N tailed sources still
-    * become per-window views t0..tN, but the SQL fires exactly once
-    * per window — after the watermark closes it — over every source's
-    * full window contents. Same append-mode (window, shard) packing as
-    * [[runSnapshot]], with the `_tname` tag carried through the packed
-    * rows to split the snapshot back into per-source views.
+  /** N tailed sources as views t0..tN, snapshot mode. A forward to
+    * [[start]], kept with this signature because the benchmark harness
+    * calls it.
     */
   def runMultiSnapshot(spark: SparkSession, cfgs: Seq[Config], sql: String,
                        format: String, checkpointDir: String,
                        sink: String => Unit = s => if (s.nonEmpty) println(s),
                        trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                       shards: Int = 32): StreamingQuery = {
-    require(cfgs.nonEmpty, "runMultiSnapshot needs at least one source")
-    require(cfgs.forall(_.tsField.isDefined),
-      "runMultiSnapshot needs tsField on every source (fire-once-per-" +
-        "complete-window is defined by the event-time watermark)")
-    val win = cfgs.head
-    val parts = cfgs.zipWithIndex.map { case (c, i) =>
-      // same per-source config routing as runMulti: throttle and
-      // seek-to-end apply per source, window settings are global
-      val src = parsed(spark, c, tname = Some(s"t$i"))
-      windowed(src, win.copy(tsField = c.tsField))
-    }
-    val views = parts.zipWithIndex.map { case (p, i) =>
-      SnapshotView(s"t$i", Some(s"t$i"), p.columns.filterNot(_ == "window").toSeq)
-    }
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    runSnapshotOn(unioned, unioned.columns.filterNot(_ == "window").toSeq,
-      views, sql, format, checkpointDir, sink, trigger, shards)
-  }
-
-  /** Continuous event-time windowed aggregation (update-mode state,
-    * watermark-bounded) — the engine-native alternative to per-batch
-    * SQL when the aggregation is expressible as DataFrame aggs.
-    */
-  def windowedAgg(spark: SparkSession, cfg: Config,
-                  keys: Seq[String], aggs: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val ts = cfg.tsField.getOrElse(
-      throw new IllegalArgumentException("windowedAgg needs an event-time field"))
-    val size = s"${cfg.windowSizeSec} seconds"
-    val slide = s"${cfg.slideSec.getOrElse(cfg.windowSizeSec)} seconds"
-    parsed(spark, cfg)
-      .withWatermark(ts, cfg.watermarkDelay)
-      .groupBy((window(col(ts), size, slide) +: keys.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+                       shards: Int = 32): StreamingQuery =
+    start(spark, cfgs, sql, format, checkpointDir, sink, trigger, snapshot = true,
+      shards = shards)
 }

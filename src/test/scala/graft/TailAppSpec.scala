@@ -405,6 +405,117 @@ class TailAppCliSpec extends SparkSpec {
     assert(viaYaml == viaFlags, s"yaml=$viaYaml flags=$viaFlags")
   }
 
+  private def logLines(dir: java.io.File, name: String, lines: String*): Unit =
+    Files.write(new java.io.File(dir, name).toPath,
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+
+  /** Runs the CLI with `--once --format raw` and returns the raw
+    * blocks; each block is a header line, a dash rule, then data rows.
+    */
+  private def rawBlocks(args: String*): Seq[Seq[String]] = {
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    TailApp.runCli((args ++ Seq("--once", "--format", "raw")).toArray,
+      sink = s => captured.add(s), stopSparkOnExit = false)
+    captured.toArray(Array.empty[String]).toSeq
+      .map(_.split("\n").filter(_.nonEmpty).toSeq)
+  }
+
+  private def dataRows(blocks: Seq[Seq[String]]): Seq[String] = blocks.flatMap(_.drop(2))
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  private val patternR =
+    """(?P<ts__date>\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) (?P<level__str>\w+) code=(?P<code__int>\d+)"""
+
+  test("--snapshot on one --dir fires each complete window once through the CLI") {
+    spark.sparkContext
+    val dir = Files.createTempDirectory("graft-cli-snap").toFile
+    logLines(dir, "a.log",
+      "2024-01-01 00:00:10 INFO 5",
+      "2024-01-01 00:00:20 WARN 9",
+      "2024-01-01 00:01:10 INFO 3",
+      "2024-01-01 00:30:00 INFO 1") // closes 00:00 and 00:01, stays open itself
+    val out = dataRows(rawBlocks(
+      "--dir", dir.getAbsolutePath, "--pattern", pattern,
+      "--window", "60", "--ts-field", "ts", "--watermark", "0 seconds",
+      "--checkpoint", tmp("graft-cli-snap-ckpt"), "--snapshot",
+      "--sql", """SELECT window_start, count(*) AS n, sum(ms) AS total_ms
+                  FROM t0 GROUP BY window_start ORDER BY window_start"""))
+    assert(out == Seq("1704067200, 2, 14", "1704067260, 1, 3"), out.toString)
+  }
+
+  /** Left/right logs for the `--dir2 --join-keys level` specs: only the
+    * 00:00 INFO rows match; `flush` adds far-ahead rows on both sides so
+    * the watermark closes the 00:00 and 00:01 windows.
+    */
+  private def joinArgs(flush: Boolean): Seq[String] = {
+    val l = Files.createTempDirectory("graft-cli-jl").toFile
+    val r = Files.createTempDirectory("graft-cli-jr").toFile
+    logLines(l, "l.log", Seq(
+      "2024-01-01 00:00:10 INFO 5",
+      "2024-01-01 00:00:20 WARN 9",
+      "2024-01-01 00:01:10 INFO 3") ++
+      (if (flush) Seq("2024-01-01 00:30:00 INFO 1") else Nil): _*)
+    logLines(r, "r.log", Seq(
+      "2024-01-01 00:00:30 INFO code=200",
+      "2024-01-01 00:00:40 ERROR code=500") ++
+      (if (flush) Seq("2024-01-01 00:30:00 INFO code=204") else Nil): _*)
+    Seq("--dir", l.getAbsolutePath, "--pattern", pattern,
+      "--dir2", r.getAbsolutePath, "--pattern2", patternR, "--join-keys", "level",
+      "--window", "60", "--ts-field", "ts", "--watermark", "0 seconds",
+      "--checkpoint", tmp("graft-cli-j-ckpt"),
+      "--sql", """SELECT window_start, level, ms, code_1 FROM t0
+                  WHERE window_start < 1704067300 ORDER BY window_start, level, ms""")
+  }
+
+  test("--dir2 --join-keys joins two tailed sources per window through the CLI") {
+    spark.sparkContext
+    val out = dataRows(rawBlocks(joinArgs(flush = false): _*)).sorted
+    assert(out == Seq("1704067200, INFO, 5, 200"), out.toString)
+  }
+
+  test("--dir2 --join-keys with --snapshot fires the joined window once, complete") {
+    spark.sparkContext
+    val out = dataRows(rawBlocks(joinArgs(flush = true) :+ "--snapshot": _*))
+    assert(out == Seq("1704067200, INFO, 5, 200"), out.toString)
+  }
+
+  test("a two-source properties --config with --snapshot fires once per window") {
+    spark.sparkContext
+    val dirs = (0 to 1).map(_ => Files.createTempDirectory("graft-cli-psnap").toFile)
+    logLines(dirs(0), "a.log", "2024-01-01 00:00:10 INFO 5", "2024-01-01 00:30:00 WARN 1")
+    logLines(dirs(1), "b.log",
+      "2024-01-01 00:00:30 INFO code=200", "2024-01-01 00:30:00 WARN code=500")
+    val p = new java.util.Properties()
+    Seq("window.size_seconds" -> "60", "window.ts_field" -> "ts",
+      "watermark" -> "0 seconds",
+      "source.0.dir" -> dirs(0).getAbsolutePath, "source.0.pattern" -> pattern,
+      "source.0.do_not_tail" -> "true",
+      "source.1.dir" -> dirs(1).getAbsolutePath, "source.1.pattern" -> patternR,
+      "source.1.do_not_tail" -> "true").foreach { case (k, v) => p.setProperty(k, v) }
+    val conf = Files.createTempDirectory("graft-cli-pconf").resolve("app.conf")
+    val w = Files.newOutputStream(conf)
+    try p.store(w, null) finally w.close()
+    val out = dataRows(rawBlocks(
+      "--config", conf.toString, "--checkpoint", tmp("graft-cli-psnap-ckpt"), "--snapshot",
+      "--sql", """SELECT t0.window_start, t0.level, t0.ms, t1.code FROM t0
+                  JOIN t1 ON t0.level = t1.level ORDER BY t0.ms"""))
+    assert(out == Seq("1704067200, INFO, 5, 200"), out.toString)
+  }
+
+  test("without --sql, one-source and two-source runs emit the same default columns") {
+    spark.sparkContext
+    val dirs = (0 to 1).map(_ => Files.createTempDirectory("graft-cli-dflt").toFile)
+    dirs.foreach(d => logLines(d, "a.log", "2024-01-01 00:00:10 INFO 5"))
+    def header(dirArgs: Seq[String]): Seq[String] =
+      rawBlocks(dirArgs ++ Seq("--window", "60", "--ts-field", "ts",
+        "--checkpoint", tmp("graft-cli-dflt-ckpt")): _*).map(_.head).distinct
+    val one = header(Seq("--dir", dirs(0).getAbsolutePath, "--pattern", pattern))
+    val two = header(dirs.flatMap(d => Seq("--dir", d.getAbsolutePath, "--pattern", pattern)))
+    assert(one == Seq("window_start, window_end, n"), one.toString)
+    assert(two == one, s"one=$one two=$two")
+  }
+
   test("--log-level flag reaches the Spark context (reference -l/--log-level)") {
     // Mutates the JVM-global log4j root logger by design (that IS the
     // flag's observable effect; one JVM = one root logger). Safe here

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -120,6 +119,33 @@ class TailStreamSpec extends SparkSpec {
     assert(counts.tail.forall(c => c.split(",", -1)(0) == "0"), counts.toString)
   }
 
+  test("throttle drops a row late past the watermark instead of failing the query") {
+    // one line per trigger at 100 s, 1000 s, 200 s (60 s period, 60 s
+    // delay): the 1000 s row moves the watermark to 940 s, so the 200 s
+    // row's period [180 s, 240 s) timed out long ago — its count is gone
+    // and the row must be discarded, not crash the state function
+    val f = Files.createTempFile("graft-late", ".log").toFile
+    val ckpt = Files.createTempDirectory("graft-late-ckpt").toFile
+    val lines = Seq(
+      "2024-01-01 00:01:40 INFO 1",
+      "2024-01-01 00:16:40 INFO 2",
+      "2024-01-01 00:03:20 INFO 3")
+    Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val cfg = TailStream.Config(
+      dir = f.getAbsolutePath, pattern = pattern, follow = true,
+      followMaxBytes = Some(lines.map(_.length + 1).max.toLong),
+      windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "60 seconds",
+      throttleMax = Some(5), format = "raw",
+      sql = Some("SELECT ms FROM t0 ORDER BY ms"))
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+      sink = s => captured.add(s), trigger = Trigger.AvailableNow())
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    val out = rawRows(captured).toSeq
+    assert(out == Seq("1", "2"), out.toString)
+  }
+
   test("runMulti applies each source's own throttle (config not dropped in N-source mode)") {
     // two sources, each with throttleMax=1 and two rows in the same
     // 60s period: each source must admit exactly ONE row — the
@@ -137,7 +163,7 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds",
       throttleMax = Some(1)))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
+    val q = TailStream.start(spark, cfgs,
       sql = """SELECT 't0' AS src, count(*) AS n FROM t0
                UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src""",
       format = "raw", checkpointDir = ckpt.getAbsolutePath,
@@ -168,7 +194,7 @@ class TailStreamSpec extends SparkSpec {
       TailStream.Config(dir = dirs(1).getAbsolutePath, pattern = pattern,
         windowSizeSec = 60, tsField = Some("ts")))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
+    val q = TailStream.start(spark, cfgs,
       sql = """SELECT 't0' AS src, count(*) AS n FROM t0
                UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src""",
       format = "raw", checkpointDir = ckpt.getAbsolutePath,
@@ -197,7 +223,7 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"))
     val cfgR = TailStream.Config(dir = dirR.getAbsolutePath, pattern = patternR,
       windowSizeSec = 60, tsField = Some("ts"))
-    val q = TailStream.runJoin(spark, cfgL, cfgR, keys = Seq("level"),
+    val q = TailStream.start(spark, Seq(cfgL, cfgR), join = Some(Seq("level")),
       sql = """SELECT window_start, level, ms, code_1 FROM t0
                ORDER BY window_start, level, ms""",
       format = "raw", checkpointDir = ckpt.getAbsolutePath,
@@ -274,8 +300,8 @@ class TailStreamSpec extends SparkSpec {
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.runSnapshot(spark, cfg, ckpt.getAbsolutePath,
-        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), shards = 4)
+      val q = TailStream.start(spark, Seq(cfg), cfg.sql.get, cfg.format, ckpt.getAbsolutePath,
+        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), snapshot = true, shards = 4)
       q.awaitTermination(60000)
     }
     writeLog(dir, "a.log", "2024-01-01 00:00:10 INFO 5")
@@ -315,8 +341,8 @@ class TailStreamSpec extends SparkSpec {
       "2024-01-01 00:01:20 INFO 2",
       "2024-01-01 00:01:30 INFO 2",
       "2024-01-01 00:30:00 INFO 1") // flushes both windows
-    val q = TailStream.runSnapshot(spark, cfg, ckpt.getAbsolutePath,
-      sink = s => captured.add(s), trigger = Trigger.AvailableNow(), shards = 4)
+    val q = TailStream.start(spark, Seq(cfg), cfg.sql.get, cfg.format, ckpt.getAbsolutePath,
+      sink = s => captured.add(s), trigger = Trigger.AvailableNow(), snapshot = true, shards = 4)
     q.awaitTermination(60000)
     val out = rawRows(captured).toSeq
     assert(out == Seq("1704067200,3"), out.toString)
@@ -334,7 +360,7 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds")
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.runJoinSnapshot(spark, cfgL, cfgR, keys = Seq("level"),
+      val q = TailStream.start(spark, Seq(cfgL, cfgR), join = Some(Seq("level")), snapshot = true,
         sql = """SELECT window_start, level, ms, code_1 FROM t0
                  ORDER BY window_start, level, ms""",
         format = "raw", checkpointDir = ckpt.getAbsolutePath,
@@ -381,7 +407,7 @@ class TailStreamSpec extends SparkSpec {
       TailStream.Config(dir = dirs(2).getAbsolutePath, pattern = patternC,
         windowSizeSec = 60, tsField = Some("ts")))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
+    val q = TailStream.start(spark, cfgs,
       sql = """SELECT t0.window_start, t0.level, t0.ms, t1.code, t2.host
                FROM t0 JOIN t1 ON t0.window_start = t1.window_start
                         AND t0.level = t1.level
@@ -407,8 +433,8 @@ class TailStreamSpec extends SparkSpec {
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.runSnapshot(spark, cfg, ckpt.getAbsolutePath,
-        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), shards = 4)
+      val q = TailStream.start(spark, Seq(cfg), cfg.sql.get, cfg.format, ckpt.getAbsolutePath,
+        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), snapshot = true, shards = 4)
       q.awaitTermination(60000)
     }
     // 00:00:40 belongs to windows [23:59:30,00:00:30)? no — to
@@ -469,17 +495,6 @@ class TailStreamSpec extends SparkSpec {
     assert(out.columns.contains("window"))
     val w = out.select("window.start", "window.end").head()
     assert(w.getTimestamp(1).getTime - w.getTimestamp(0).getTime == 60000L)
-  }
-
-  test("windowedAgg builds a watermarked streaming aggregation plan") {
-    val dir = Files.createTempDirectory("graft-tail2").toFile
-    writeLog(dir, "a.log", "2024-01-01 00:00:10 INFO 5")
-    val cfg = TailStream.Config(dir = dir.getAbsolutePath, pattern = pattern,
-      windowSizeSec = 30, tsField = Some("ts"))
-    val df = TailStream.windowedAgg(spark, cfg, Seq("level"),
-      Seq(count(lit(1)).as("n")))
-    assert(df.isStreaming)
-    assert(df.columns.toSeq == Seq("window", "level", "n"))
   }
 
   test("JSONL tail: streamed split file equals the batch parse (r17)") {
