@@ -14,22 +14,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
-      // same CBO default as GraftSession: q03b plans from ANALYZE'd
-      // stats; everything else is unaffected (path reads carry no
-      // stats) but runs under one uniform regime
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(cpus)
       // the status stores otherwise retain metrics for every execution
       // of the 130-query × 4-run sweep on the driver heap; that growth
       // (plus never-GC'd broadcast/shuffle refs, below) is the
@@ -41,42 +26,13 @@ object Bench {
       .config("spark.ui.retainedTasks", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the inter-query cleanup below unpersists localCheckpointed RDDs;
-    // Spark warns per RDD that the truncated lineage cannot recompute
-    // (intended — sealed results are never reused across queries), and
-    // ~4 lines × 92 queries would flood the driver's captured tail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // "WindowExec: No Partition Defined" fires on the repo's global
-    // windows, every one of which is bounded by contract (audited:
-    // per-partition prefix rows, <=4096 md5 buckets, score/path
-    // histograms, top-R vocab, |sources| totals — the bound is stated
-    // in a comment at each site, and PlanSpec pins the shapes). On a
-    // 100x-scale log the warning would cry wolf for frames of a few
-    // thousand rows; corpus-sized windows are designed out, not
-    // silenced — new operators must keep stating their bound.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietLogs()
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
+    def runOnce(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // dedup/ANN queries persist() intermediates; drop them so later
-      // queries aren't taxed by leftover cache blocks. clearCache only
-      // covers CacheManager entries — localCheckpoint blocks (sealed
-      // pair pipelines, Caching.sealOver) register on the RDD directly
-      // and otherwise linger until GC + ContextCleaner happen to run,
-      // which made seal-heavy queries' medians bimodal across runs
-      // (d07 1.2s vs 4.3s with identical code).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
-    }
 
     // Warmup: touch every table's footer, then warm and measure each
     // query back-to-back — codegen compilation and planning constants
@@ -97,26 +53,7 @@ object Bench {
       .fold(SparkEntry.queries.keys.toSeq)(f =>
         SparkEntry.queries.keys.toSeq.filter(f))
       .sorted
-    // Median of 3 measured runs (after one warm run, still interleaved
-    // per query): the sandbox has ambient load, and a single-shot
-    // record turns one noise spike into a phantom regression in the
-    // round artifact (r4 recorded 4.25s for a query that re-measures
-    // at 0.70s). The median absorbs one outlier per query.
-    val results = names.map { n =>
-      runOnce(n)
-      val ts = Seq.fill(3)(runOnce(n)).sorted
-      // Broadcast blocks and shuffle files are reclaimed by
-      // ContextCleaner only after their references are GARBAGE
-      // COLLECTED — and a 128 GiB heap can run the whole sweep without
-      // a single full GC, so hundreds of dead broadcasts and shuffle
-      // files pile onto the block manager and disk, taxing whoever
-      // runs later. One explicit GC per query transition (outside the
-      // timed window) plus a short settle for the async cleaner keeps
-      // query N's measurement independent of queries 1..N-1.
-      System.gc()
-      Thread.sleep(200)
-      n -> ts(1)
-    }
+    val results = names.map(n => n -> measure(spark)(runOnce(n))(1))
     val total = results.map(_._2).sum
     // The composed CurateApp pipeline (annotate→gate→scrub→dedup→
     // decontaminate→sample→write) as ONE bench entry: the end-to-end
@@ -140,9 +77,7 @@ object Bench {
           false }
       val sec = (System.nanoTime() - t0) / 1e9
       val m = meter.stop()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      cleanup(spark)
       f""","pipeline":{"ok":$ok,"sec":$sec%.1f,"shuffle_mb":${m.shuffleWriteBytes / 1e6}%.0f,""" +
         f""""shuffle_stages":${m.shuffleStages},"peak_task_mb":${m.maxTaskPeakExecMem / 1e6}%.0f}"""
     } else ""
@@ -243,5 +178,54 @@ object Bench {
       }
     spark.stop()
     println(out)
+  }
+
+  /** Seconds `work` takes, then [[cleanup]] outside the timed window. */
+  private[graft] def timed(spark: SparkSession)(work: => Unit): Double = {
+    val t0 = System.nanoTime()
+    work
+    val dt = (System.nanoTime() - t0) / 1e9
+    cleanup(spark)
+    dt
+  }
+
+  /** One warm run, then 3 measured runs, sorted (`(1)` is the median).
+    *
+    * Median of 3 (after one warm run, still interleaved per query):
+    * the sandbox has ambient load, and a single-shot record turns one
+    * noise spike into a phantom regression in the round artifact (r4
+    * recorded 4.25s for a query that re-measures at 0.70s). The median
+    * absorbs one outlier per query.
+    */
+  private[graft] def measure(spark: SparkSession)(work: => Unit): Seq[Double] = {
+    timed(spark)(work)
+    val ts = Seq.fill(3)(timed(spark)(work)).sorted
+    // Broadcast blocks and shuffle files are reclaimed by
+    // ContextCleaner only after their references are GARBAGE
+    // COLLECTED — and a 128 GiB heap can run the whole sweep without
+    // a single full GC, so hundreds of dead broadcasts and shuffle
+    // files pile onto the block manager and disk, taxing whoever
+    // runs later. One explicit GC per query transition (outside the
+    // timed window) plus a short settle for the async cleaner keeps
+    // query N's measurement independent of queries 1..N-1.
+    System.gc()
+    Thread.sleep(200)
+    ts
+  }
+
+  /** Drops every cached frame and persisted RDD between runs.
+    *
+    * dedup/ANN queries persist() intermediates; drop them so later
+    * queries aren't taxed by leftover cache blocks. clearCache only
+    * covers CacheManager entries — localCheckpoint blocks (sealed
+    * pair pipelines, Caching.sealOver) register on the RDD directly
+    * and otherwise linger until GC + ContextCleaner happen to run,
+    * which made seal-heavy queries' medians bimodal across runs
+    * (d07 1.2s vs 4.3s with identical code).
+    */
+  private[graft] def cleanup(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 }

@@ -65,6 +65,28 @@ object GraftSession {
     s
   }
 
+  /** Raises two benign, per-object WARN floods to ERROR for long
+    * multi-query runs (Bench, Probe).
+    *
+    * Cleanup between queries unpersists localCheckpointed RDDs; Spark
+    * warns per RDD that the truncated lineage cannot recompute
+    * (intended — sealed results are never reused across queries), and
+    * ~4 lines × 92 queries would flood the driver's captured tail.
+    *
+    * "WindowExec: No Partition Defined" fires on the repo's global
+    * windows, every one of which is bounded by contract (audited:
+    * per-partition prefix rows, <=4096 md5 buckets, score/path
+    * histograms, top-R vocab, |sources| totals — the bound is stated
+    * in a comment at each site, and PlanSpec pins the shapes). On a
+    * 100x-scale log the warning would cry wolf for frames of a few
+    * thousand rows; corpus-sized windows are designed out, not
+    * silenced — new operators must keep stating their bound.
+    */
+  def quietLogs(): Unit =
+    for (logger <- Seq("org.apache.spark.rdd", "org.apache.spark.sql.execution.window"))
+      org.apache.logging.log4j.core.config.Configurator.setLevel(
+        logger, org.apache.logging.log4j.Level.ERROR)
+
   /** Standard table loader: one parquet per table, as in TESTDATA.md. */
   def table(spark: SparkSession, dir: String, name: String) =
     spark.read.parquet(s"$dir/$name.parquet")

@@ -3,13 +3,16 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 
 /** Job-scoped resource meter: total shuffle bytes written, how many
   * stages actually shuffled, and the largest single-task execution-
   * memory peak (the number that decides whether a task spills on a
   * real executor — per-task, because a cluster schedules tasks, not
-  * stages, onto fixed-size executor slots).
+  * stages, onto fixed-size executor slots). Also counts finished jobs
+  * and stages, the summed stage wall time (submission to completion)
+  * and the summed task GC time.
   *
   * Usage: `val m = Metrics.start(sc); ...run...; val r = m.stop()`.
   * The shuffle totals count EXECUTED stages only — a reused exchange
@@ -19,22 +22,34 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
   */
 object Metrics {
   final case class Snapshot(shuffleWriteBytes: Long, shuffleReadBytes: Long,
-                            shuffleStages: Int, maxTaskPeakExecMem: Long)
+                            shuffleStages: Int, maxTaskPeakExecMem: Long,
+                            jobs: Int, stages: Int, stageMs: Long, gcMs: Long)
 
   final class Meter private[Metrics] (sc: SparkContext) {
     private val wBytes = new AtomicLong(0L)
     private val rBytes = new AtomicLong(0L)
-    private val stages = new AtomicInteger(0)
+    private val shuffleStages = new AtomicInteger(0)
     private val peak = new AtomicLong(0L)
+    private val jobs = new AtomicInteger(0)
+    private val stages = new AtomicInteger(0)
+    private val stageMs = new AtomicLong(0L)
+    private val gcMs = new AtomicLong(0L)
     private val listener = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
+        val i = e.stageInfo
+        stages.incrementAndGet()
+        for (a <- i.completionTime; b <- i.submissionTime) stageMs.addAndGet(a - b)
+        val m = i.taskMetrics
         if (m != null) {
           val w = m.shuffleWriteMetrics.bytesWritten
           val r = m.shuffleReadMetrics.totalBytesRead
           wBytes.addAndGet(w)
           rBytes.addAndGet(r)
-          if (w > 0) { stages.incrementAndGet(); () }
+          gcMs.addAndGet(m.jvmGCTime)
+          if (w > 0) { shuffleStages.incrementAndGet(); () }
         }
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -64,7 +79,8 @@ object Metrics {
         }
       } catch { case _: Throwable => Thread.sleep(500) }
       sc.removeSparkListener(listener)
-      Snapshot(wBytes.get(), rBytes.get(), stages.get(), peak.get())
+      Snapshot(wBytes.get(), rBytes.get(), shuffleStages.get(), peak.get(),
+        jobs.get(), stages.get(), stageMs.get(), gcMs.get())
     }
   }
 

@@ -321,12 +321,12 @@ object SparkEntry {
     * counts — estimator drift now breaks the driver hash loudly
     * instead of hiding in a spec-only gate. The threshold sits a
     * measured margin below the pooled recall at all three SFs
-    * (GateProbe prints the measurements), so the gate trips on a
+    * (`Probe gates` prints the measurements), so the gate trips on a
     * mechanism change, not on data noise. */
   /** The seeded-ANN rankings behind the gate queries, exposed
     * package-private at the EXACT shipped parameters: the probes and
-    * specs that justify the pinned gate thresholds (GateProbe,
-    * RecallProbe, AnnRecallSpec) call THESE, so tuning a parameter
+    * specs that justify the pinned gate thresholds (`Probe gates`,
+    * AnnRecallSpec) call THESE, so tuning a parameter
     * here is the one and only knob — the measurement surfaces cannot
     * silently drift from the driver gates (r17 review finding).
     */
@@ -1259,7 +1259,7 @@ object SparkEntry {
       // itself is not DuckDB-expressible, so the query runs lshTopK
       // AND the brute-force exact ranking and emits pooled recall@10
       // >= 0.80 pinned true in the oracle (measured micro 0.88–0.94
-      // across the three SFs; GateProbe). The ranking mechanism stays
+      // across the three SFs; `Probe gates`). The ranking mechanism stays
       // the operator under test — a signature or banding drift now
       // breaks the driver hash, not just ScaleOpsSpec's 0.89 gate.
       val emb = AnnRankings.emb(s, dir)

@@ -43,19 +43,22 @@ import org.apache.spark.sql.DataFrame
   * dir the sealed result is only as durable as its executors.
   */
 private[graft] object Caching {
-  /** Dev-only escape hatch for [[graft.PlanDump]] (r20, VERDICT item:
-    * the r19 "before" plans were 5-node post-checkpoint stubs): under
-    * `-Dgraft.seal.skip=1` the seal is a PASS-THROUGH — no checkpoint,
-    * caches dropped immediately — so `.explain` shows the full
-    * pre-seal lineage the query would otherwise truncate. Never set
-    * by Bench/Verify/production paths; plans dumped this way are for
-    * READING, not executing (an unsealed repartitionByRange consumed
-    * twice may sample different bounds).
+  private val unsealed = new scala.util.DynamicVariable(false)
+
+  /** Runs `body` with every [[sealOver]] a PASS-THROUGH — no
+    * checkpoint, caches dropped immediately — so `.explain` shows the
+    * full pre-seal lineage a sealed query would otherwise truncate to
+    * a `Scan ExistingRDD` stub. Scoped to `body` on the calling
+    * thread (and threads it starts): a seal outside it always
+    * checkpoints. Only `Probe plan`
+    * uses it; plans built this way are for READING, not executing (an
+    * unsealed repartitionByRange consumed twice may sample different
+    * bounds).
     */
-  private def skipSeal: Boolean = sys.props.get("graft.seal.skip").contains("1")
+  private[graft] def withoutSeal[A](body: => A): A = unsealed.withValue(true)(body)
 
   def sealOver(result: DataFrame, cached: DataFrame*): DataFrame =
-    if (skipSeal) { cached.foreach { df => df.unpersist(); () }; result }
+    if (unsealed.value) { cached.foreach { df => df.unpersist(); () }; result }
     else try {
       val sc = result.sparkSession.sparkContext
       if (sc.getCheckpointDir.isDefined) {

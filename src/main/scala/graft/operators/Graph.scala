@@ -262,10 +262,14 @@ object Graph {
     // persisted: THREE setup consumers read the edge projection
     // (nodes, outW, the share join) and on a corpus-derived graph its
     // lineage is the expensive part (t45 tokenizes the whole corpus,
-    // q38b aggregates lineitem)
+    // q38b aggregates lineitem). A null endpoint is not an edge: a
+    // null _dst would read as "no match" in the left join below and
+    // pour its source's whole rank into the dangling mass on top of
+    // the source's real shares, and a null id would count as a node
     val e = edges.select(col(srcCol).cast("long").as("_src"),
       col(dstCol).cast("long").as("_dst"),
-      col(weightCol).cast("long").as("_w")).persist()
+      col(weightCol).cast("long").as("_w"))
+      .filter(col("_src").isNotNull && col("_dst").isNotNull).persist()
     val nodes = e.select(col("_src").as("id"))
       .unionByName(e.select(col("_dst").as("id"))).distinct().persist()
     val outW = e.groupBy(col("_src")).agg(sum(col("_w")).as("_ow"))

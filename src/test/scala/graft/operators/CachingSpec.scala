@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
@@ -31,5 +33,28 @@ class CachingSpec extends SparkSpec {
       assert(rddDirs(dir.toFile).nonEmpty,
         s"expected rdd-* checkpoint data under $dir")
     } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  private def isSealed(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LogicalRDD]
+
+  test("sealOver ignores the graft.seal.skip system property: it still checkpoints") {
+    System.setProperty("graft.seal.skip", "1")
+    try {
+      val cached = spark.range(100).toDF("id").persist()
+      val out = Caching.sealOver(cached.filter("id < 7"), cached)
+      assert(isSealed(out), out.queryExecution.logical.toString)
+      assert(out.count() == 7)
+    } finally { System.clearProperty("graft.seal.skip"); () }
+  }
+
+  test("withoutSeal: sealOver returns the unsealed plan and unpersists the inputs") {
+    val cached = spark.range(100).toDF("id").persist()
+    val result = cached.filter("id < 7")
+    val out = Caching.withoutSeal(Caching.sealOver(result, cached))
+    assert(out eq result)
+    assert(!isSealed(out))
+    assert(cached.storageLevel == StorageLevel.NONE, "input must be unpersisted")
+    assert(isSealed(Caching.sealOver(spark.range(3).toDF("id"))), "the scope must end with the block")
   }
 }

@@ -82,6 +82,21 @@ class GraphSpec extends SparkSpec {
     assert(got(3L) > got(1L) && got(1L) == got(2L), got.toString)
   }
 
+  test("pageRank drops edges with a null endpoint: no double-counted mass, no null node") {
+    // two 2-cycles rank 0.25 each; (1, null) must not pour node 1's
+    // rank into the dangling mass, and (null, 3) must not add a node
+    val clean = Seq[(java.lang.Long, java.lang.Long, Long)](
+      (1L, 2L, 1L), (2L, 1L, 1L), (3L, 4L, 1L), (4L, 3L, 1L))
+    val withNulls = clean ++ Seq[(java.lang.Long, java.lang.Long, Long)](
+      (1L, null, 1L), (null, 3L, 1L))
+    def ranks(es: Seq[(java.lang.Long, java.lang.Long, Long)]) =
+      Graph.pageRank(es.toDF("src", "dst", "w"), "src", "dst", "w", iters = 3)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = ranks(withNulls)
+    assert(math.abs(got.values.sum - 1.0) <= 1e-9, s"mass: ${got.values.sum}")
+    assert(got == ranks(clean), got.toString)
+  }
+
   test("labelPropagation: two weight-tight cliques keep separate labels; min-label wins ties") {
     // clique A = {0,1,2} (heavy internal edges), clique B = {10,11,12},
     // one weak bridge 2-10: after 3 rounds each clique converges to
